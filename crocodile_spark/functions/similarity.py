@@ -44,12 +44,18 @@ def set_jaccard(a: Column | str, b: Column | str) -> Column:
     exact-Jaccard verify over MinHash candidates dropped 2.8 s -> 0.9 s at
     sf0.1). Identical values and null/empty law: Spark's array_intersect
     returns the distinct intersection, so for distinct inputs the identity
-    is exact; null arrays null the union expression -> 0.0, as before.
+    is exact. A null array scores 0.0 in either ANSI mode: the explicit
+    null guard matters with ANSI off, where legacy ``size(NULL)`` is -1
+    and the arithmetic union would give -1/|B|.
     Callers whose arrays may contain duplicates must use token_jaccard."""
     a, b = _col(a), _col(b)
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(a).cast("double") + F.size(b).cast("double") - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (
+        F.when(a.isNull() | b.isNull(), F.lit(0.0))
+        .when(union > 0, inter / union)
+        .otherwise(F.lit(0.0))
+    )
 
 
 def ngram_jaccard(a: Column | str, b: Column | str, n: int = 3) -> Column:

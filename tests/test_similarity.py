@@ -13,6 +13,7 @@ from crocodile_spark.functions.similarity import (
     jaro_winkler,
     levenshtein_similarity,
     ngram_jaccard,
+    set_jaccard,
     token_jaccard,
 )
 
@@ -31,6 +32,22 @@ def test_token_jaccard(spark):
 def test_token_jaccard_empty_union_is_zero(spark):
     e = F.array().cast("array<string>")
     assert _one(spark, token_jaccard(e, e)) == 0.0
+
+
+def test_set_jaccard_null_array_is_zero_with_ansi_off(spark):
+    """With ANSI off, legacy size(NULL) = -1: the arithmetic union must not
+    turn a NULL array into -1/|B|. Same values as with ANSI on."""
+    df = spark.createDataFrame(
+        [(None, ["a", "b"]), (["a", "b"], None), (None, None), (["a"], ["a", "b"])],
+        "a array<string>, b array<string>",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        got = [r["j"] for r in df.select(set_jaccard("a", "b").alias("j")).collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == [0.0, 0.0, 0.0, 0.5]
 
 
 def test_ngram_jaccard(spark):
