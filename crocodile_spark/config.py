@@ -25,7 +25,6 @@ class PipelineConfig:
     minhash_band_size: int = 4              # rows per LSH band -> 4 bands
     shingle_size: int = 3                   # char n-gram size (F5 law, n=3)
     max_block_size: int = 64                # cap pairs per block: drop oversized keys
-    salt_buckets: int = 8                   # salt fan-out for hot blocking keys
     min_token_length: int = 2               # drop 1-char tokens from blocking keys
     # mention-signature token selection: a token is "distinctive" when its
     # document frequency <= max(floor, ceil(frac * N)) -- a RELATIVE law

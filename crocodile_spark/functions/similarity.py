@@ -163,14 +163,6 @@ def monge_elkan(tokens_a, tokens_b) -> float:
     return max(one_way(ta, tb), one_way(tb, ta))
 
 
-@F.pandas_udf(T.DoubleType())
-def monge_elkan_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched Monge-Elkan over two array<string> token columns."""
-    return pd.Series(
-        [monge_elkan(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
 def monge_elkan_lev(a: Column | str, b: Column | str) -> Column:
     """Native Monge-Elkan over Levenshtein similarity: for each token of
     one set, the best edit-similarity match in the other, averaged;

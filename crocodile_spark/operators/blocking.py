@@ -1,4 +1,4 @@
-"""Stage 2 -- salted multi-key blocking (SURVEY.md section 7.1 step 3).
+"""Stage 2 -- capped multi-key blocking (SURVEY.md section 7.1 step 3).
 
 Replaces the reference's LamAPI candidate retrieval (crocodile/fetchers.py:
 51-121, operator S6) with self-contained blocking: candidate *pairs* are
@@ -16,10 +16,9 @@ key family: hash groups emit linear min-url star edges (exact_dup_pairs),
 immune to block caps and quadratic blowup.
 
 Scale design (10^12-doc posture):
-  * token document frequency is a single hash aggregation -- map-side
-    partial counts make COUNT skew-immune (a reducer receives at most one
-    partial row per map task per key); explicit salting (salted_count) is
-    reserved for non-constant-size aggregation state and skewed join keys;
+  * token document frequency and block sizes are single hash aggregations
+    -- map-side partial counts make COUNT skew-immune (a reducer receives
+    at most one partial row per map task per key), so no salting is needed;
   * every key family is capped at ``max_block_size`` members -- an
     oversized block both explodes pair count quadratically and marks a
     non-discriminative key (a token with DF > cap cannot identify an
@@ -27,6 +26,10 @@ Scale design (10^12-doc posture):
   * pair generation is a self-equi-join on the capped key, repartitioned by
     key, with ``url_a < url_b`` and a distinct on the pair -- AQE skew-join
     splits any residual imbalance.
+
+The MinHash law (:func:`minhash_signature`, :func:`minhash_band_keys`) and
+the capped-bucket pair kernel (:func:`cap_blocks`, :func:`generate_pairs`)
+live here once; the dedup near-dup finders and ``lsh_topk`` call them too.
 """
 
 from __future__ import annotations
@@ -38,67 +41,125 @@ from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams
 
 
-def salted_count(df: DataFrame, key: str, salt_buckets: int = 8) -> DataFrame:
-    """Two-phase salted count: groupBy(key, salt) -> groupBy(key).
-
-    NOTE on when to use: for plain COUNT aggregations Spark's map-side
-    partial aggregation already bounds reduce-side width (each reducer
-    receives at most one partial row per map task per key), so the hot
-    path below uses a direct groupBy().count() -- one shuffle, skew-immune.
-    Salting is the tool for skewed aggregations whose partial state is
-    NOT constant-size (collect_list/set of a hot key) and for skewed join
-    keys; it is kept here, tested, for those cases.
-    """
-    salted = df.withColumn(
-        "_salt", (F.xxhash64(F.monotonically_increasing_id()) % salt_buckets)
-    )
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(key).agg(F.sum("_partial").alias("count"))
-
-
 def key_count(df: DataFrame, key: str) -> DataFrame:
     """Per-key count; partial aggregation makes this skew-immune."""
     return df.groupBy(key).agg(F.count(F.lit(1)).alias("count"))
 
 
-def minhash_signature(col, num_hashes: int, shingle_size: int = 3):
-    """MinHash signature as array<bigint> -- native expressions only.
+def portable_hash64(col, seed: int):
+    """Portable 60-bit hash, identical in Spark and DuckDB:
 
-    Hash family: xxhash64 with per-slot integer seeds over the distinct
-    char-``shingle_size``-grams of the string. Empty shingle set -> nulls
-    (filtered out by the band keys).
+      Spark : conv(substr(md5('<seed>:' || x), 1, 15), 16, 10)::long
+      DuckDB: CAST(('0x' || substr(md5('<seed>:' || x), 1, 15)) AS BIGINT)
+
+    Non-negative (< 2^60), so shift/mask/bit ops are sign-safe. The
+    xxhash64 fast path stays the production default; this exists so the
+    DuckDB oracles can verify the ACTUAL minhash/simhash pairs instead of
+    a rows-only count.
     """
-    shingles = char_ngrams(col, shingle_size)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
+    ).cast("long")
+
+
+def minhash_affine_constants(num_hashes: int, seed: int = 1234) -> list[tuple[int, int]]:
+    """Seeded odd (A_i, B_i) < 2^29 pairs for the portable minhash family
+    h_i = hi*A_i + lo*B_i; shared with the DuckDB oracle generator."""
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(1, 1 << 29) | 1, rng.randrange(1, 1 << 29) | 1)
+        for _ in range(num_hashes)
+    ]
+
+
+def minhash_signature(
+    df: DataFrame,
+    id_col: str,
+    text,
+    num_hashes: int,
+    shingle_size: int = 3,
+    portable: bool = False,
+) -> DataFrame:
+    """The MinHash signature law: (``id_col``, mh0..mh<num_hashes-1>) over
+    the distinct char-``shingle_size``-grams of the ``text`` expression.
+
+    Shingles are exploded once and each of the k hash slots is a plain
+    ``min`` aggregate (map-side partial aggregation applies), so the plan
+    carries k tiny expressions instead of k inlined copies of the shingle
+    generator -- the inlined form falls out of whole-stage codegen under
+    ``explode`` and goes quadratic in interpreted mode. A record without
+    shingles gets no row.
+
+    Hash law: xxhash64 with per-slot integer seeds, or with
+    ``portable=True`` one md5 per shingle and k affine derivations
+    (:func:`portable_hash64`, :func:`minhash_affine_constants`), which the
+    DuckDB oracles replay bit for bit.
+    """
+    sh = df.select(
+        F.col(id_col), F.explode(char_ngrams(text, shingle_size)).alias("sh")
+    )
+    if portable:
+        # ONE md5 per shingle, then k affine derivations (hi*A_i + lo*B_i
+        # over the 30-bit halves, < 2^60 so no overflow under ANSI) --
+        # k md5 calls per shingle would dominate the whole query.
+        # r8: hi/lo are materialized as COLUMNS in a projection before the
+        # aggregation -- as inline expressions inside the k min() aggregates
+        # each slot re-derived the md5+conv base (no cross-aggregate
+        # subexpression elimination: 2k md5 evaluations per shingle,
+        # measured 3.3 s -> 1.3 s for the signature aggregation at sf0.1).
+        base = portable_hash64(F.col("sh"), 0)
+        sh = sh.select(
+            id_col,
+            F.shiftright(base, 30).alias("_hi"),
+            base.bitwiseAND(F.lit((1 << 30) - 1)).alias("_lo"),
+        )
+        ab = minhash_affine_constants(num_hashes)
+        hashes = [F.col("_hi") * a + F.col("_lo") * b for a, b in ab]
+    else:
+        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(num_hashes)]
+    return sh.groupBy(id_col).agg(
+        *[F.min(h).alias(f"mh{i}") for i, h in enumerate(hashes)]
     )
 
 
-def band_keys(sig_col, num_hashes: int, band_size: int):
-    """LSH band keys 'mh<i>:<hash(band)>' from a signature column."""
-    n_bands = num_hashes // band_size
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"mh{b}:"),
-                F.xxhash64(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.element_at(sig_col, b * band_size + j + 1).cast("string")
-                            for j in range(band_size)
-                        ],
-                    )
-                ).cast("string"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+def minhash_band_keys(
+    sig: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    portable: bool = False,
+) -> DataFrame:
+    """LSH band keys as (``id_col``, key) rows, one per band:
+    ``mh<b>:<hash>``, the hash taken over the band's slots cast to string
+    and joined with ``_`` -- xxhash64 as a decimal string, or with
+    ``portable=True`` the first 16 hex digits of md5 (the oracle law).
+
+    The xxhash64 strings are stored resolution state (:func:`static_keys`
+    persists them), so their format must not change."""
+
+    def band_hash(joined):
+        if portable:
+            return F.substring(F.md5(joined), 1, 16)
+        return F.xxhash64(joined).cast("string")
+
+    bands = [
+        F.concat(
+            F.lit(f"mh{b}:"),
+            band_hash(
+                F.concat_ws(
+                    "_",
+                    *[
+                        F.col(f"mh{b * band_size + j}").cast("string")
+                        for j in range(band_size)
+                    ],
+                )
+            ),
+        )
+        for b in range(num_hashes // band_size)
+    ]
+    return sig.select(id_col, F.explode(F.array(*bands)).alias("key"))
 
 
 def mention_df_threshold(cfg: PipelineConfig, n_records: int) -> int:
@@ -237,36 +298,6 @@ def signatures_from_distinctive(
     )
 
 
-def minhash_band_keys(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """MinHash LSH band keys via explode -> aggregate (the scalable form).
-
-    Shingles are exploded once and each of the k hash slots is a plain
-    ``min`` aggregate (map-side partial aggregation applies), so the plan
-    carries k tiny expressions instead of k inlined copies of the shingle
-    generator -- the inlined form falls out of whole-stage codegen under
-    ``explode`` and goes quadratic in interpreted mode.
-    """
-    k, bsz = cfg.minhash_num_hashes, cfg.minhash_band_size
-    sh = records.select(
-        "url", F.explode(char_ngrams(F.col("text_norm"), cfg.shingle_size)).alias("sh")
-    )
-    sig = sh.groupBy("url").agg(
-        *[F.min(F.xxhash64("sh", F.lit(i))).alias(f"mh{i}") for i in range(k)]
-    )
-    bands = [
-        F.concat(
-            F.lit(f"mh{b}:"),
-            F.xxhash64(
-                F.concat_ws(
-                    "_", *[F.col(f"mh{b * bsz + j}").cast("string") for j in range(bsz)]
-                )
-            ).cast("string"),
-        )
-        for b in range(k // bsz)
-    ]
-    return sig.select("url", F.explode(F.array(*bands)).alias("key"))
-
-
 def token_keys(sigs: DataFrame) -> DataFrame:
     """The corpus-DF-dependent key family: ``tok:`` keys from
     ``block_tokens`` (cap-eligible distinctive tokens). This is the only
@@ -290,7 +321,9 @@ def static_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     host = sigs.where(
         F.col("host").isNotNull() & (F.length("host") > 0)
     ).select("url", F.concat(F.lit("host:"), F.col("host")).alias("key"))
-    return host.union(minhash_band_keys(sigs, cfg))
+    k = cfg.minhash_num_hashes
+    sig = minhash_signature(sigs, "url", F.col("text_norm"), k, cfg.shingle_size)
+    return host.union(minhash_band_keys(sig, "url", k, cfg.minhash_band_size))
 
 
 def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -302,31 +335,43 @@ def blocking_keys(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return token_keys(sigs).union(static_keys(sigs, cfg))
 
 
-def cap_blocks(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Drop keys whose member count exceeds the block cap."""
-    sizes = key_count(keys, "key")
-    ok = sizes.where(F.col("count") <= cfg.max_block_size).select("key")
-    return keys.join(ok, "key", "inner")
+def cap_blocks(keys: DataFrame, cap: int, key: str = "key") -> DataFrame:
+    """Drop blocks whose member count (rows per ``key``) exceeds ``cap``:
+    an oversized block explodes pair count quadratically and marks a
+    non-discriminative key."""
+    ok = key_count(keys, key).where(F.col("count") <= cap).select(key)
+    return keys.join(ok, key, "inner")
 
 
 def generate_pairs(
-    capped_keys: DataFrame, cfg: PipelineConfig, distinct: bool = True
+    capped: DataFrame,
+    id_col: str = "url",
+    key: str = "key",
+    carry: tuple[str, ...] = (),
+    distinct: bool = True,
 ) -> DataFrame:
-    """Self-join per key -> distinct unordered candidate pairs.
+    """Self-join per key -> distinct unordered candidate pairs
+    (``<id_col>_a``, ``<id_col>_b``, then ``<c>_a``, ``<c>_b`` for each
+    ``carry`` column).
 
     The equi-join itself hash-partitions both sides by key (no explicit
-    repartition needed); url_a < url_b halves the cross product and fixes
-    pair orientation (deterministic output); the final distinct collapses
-    pairs that co-occur under several keys (callers that union further
-    pair sources pass distinct=False and dedup once at the end).
+    repartition needed); ``<id>_a < <id>_b`` halves the cross product and
+    fixes pair orientation (deterministic output); the final distinct
+    collapses pairs that co-occur under several keys (callers that union
+    further pair sources pass distinct=False and dedup once at the end).
+    Carried columns must be functions of the id, or the distinct keeps
+    one row per distinct carried value.
     """
-    left = capped_keys
-    right = capped_keys.withColumnRenamed("url", "url_b")
+    cols = (id_col, *carry)
+
+    def side(s):
+        return capped.select(key, *[F.col(c).alias(f"{c}_{s}") for c in cols])
+
     pairs = (
-        left.withColumnRenamed("url", "url_a")
-        .join(right, "key", "inner")
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b")
+        side("a")
+        .join(side("b"), key, "inner")
+        .where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
+        .select(*[f"{c}_{s}" for c in cols for s in "ab"])
     )
     return pairs.distinct() if distinct else pairs
 
@@ -353,9 +398,8 @@ def pairs_from_signatures(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Candidate pairs from a signature table (carries url/host/row_hash/
     text_norm/sig_tokens): capped key blocks + linear exact-dup stars,
     deduplicated once."""
-    keys = blocking_keys(sigs, cfg)
-    capped = cap_blocks(keys, cfg)
-    pairs = generate_pairs(capped, cfg, distinct=False)
+    capped = cap_blocks(blocking_keys(sigs, cfg), cfg.max_block_size)
+    pairs = generate_pairs(capped, distinct=False)
     return pairs.union(exact_dup_pairs(sigs)).dropDuplicates(["url_a", "url_b"])
 
 

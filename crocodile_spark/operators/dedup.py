@@ -15,11 +15,12 @@ Five families, all returning DataFrames (ids/pairs/cluster assignments):
                         random-hyperplane LSH bucketing
 
 Scale posture: every family is explode -> aggregate/join on a bounded key
-(block caps where a key can be hot); no driver-side loops. Hashing and set
-algebra are native expressions; the one Arrow pandas UDF (the SimHash
-bit-count fold, r8) is integer-exact, per-document-bounded, and exists
-because its native 60-aggregate twin costs seconds of driver-side
-plan/codegen time per query (guide section 4.2).
+(block caps where a key can be hot); no collect-and-loop outside Spark. The
+MinHash law and the capped-bucket pair kernel are blocking.py's, shared
+with ER blocking. Hashing and set algebra are native expressions, except
+the SimHash fingerprint fold: an integer-exact, per-document-bounded
+Arrow pandas UDF over the document's token hashes (as 60/64 native
+sum(CASE) aggregates it cost ~7 s of Catalyst/Janino planning per query).
 """
 
 from __future__ import annotations
@@ -29,11 +30,16 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crocodile_spark.config import PipelineConfig
 from crocodile_spark.functions.normalize import char_ngrams, tokenize
 from crocodile_spark.functions.similarity import cosine_similarity, set_jaccard
-from crocodile_spark.operators.blocking import salted_count
-from crocodile_spark.operators.blocking import spread as _spread
+from crocodile_spark.operators.blocking import (
+    cap_blocks,
+    generate_pairs,
+    minhash_band_keys,
+    minhash_signature,
+    portable_hash64,
+    spread,
+)
 
 
 def exact_duplicates(
@@ -53,71 +59,6 @@ def exact_duplicates(
     )
 
 
-def portable_hash64(col, seed: int):
-    """Portable 60-bit hash, identical in Spark and DuckDB:
-
-      Spark : conv(substr(md5('<seed>:' || x), 1, 15), 16, 10)::long
-      DuckDB: CAST(('0x' || substr(md5('<seed>:' || x), 1, 15)) AS BIGINT)
-
-    Non-negative (< 2^60), so shift/mask/bit ops are sign-safe. The
-    xxhash64 fast path stays the production default; this exists so the
-    driver's DuckDB oracle can verify the ACTUAL minhash/simhash pairs
-    instead of a rows-only count.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def minhash_affine_constants(num_hashes: int, seed: int = 1234) -> list[tuple[int, int]]:
-    """Seeded odd (A_i, B_i) < 2^29 pairs for the portable minhash family
-    h_i = hi*A_i + lo*B_i; shared with the DuckDB oracle generator."""
-    import random
-
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, 1 << 29) | 1, rng.randrange(1, 1 << 29) | 1)
-        for _ in range(num_hashes)
-    ]
-
-
-def minhash_signature_agg(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_size: int = 3,
-    portable: bool = False,
-) -> DataFrame:
-    """(id, mh0..mhk-1) via explode->aggregate (the codegen-safe form)."""
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(char_ngrams(F.lower(F.col(text_col)), shingle_size)).alias("sh"),
-    )
-    if portable:
-        # ONE md5 per shingle, then k affine derivations (hi*A_i + lo*B_i
-        # over the 30-bit halves, < 2^60 so no overflow under ANSI) --
-        # k md5 calls per shingle would dominate the whole query.
-        # r8: hi/lo are materialized as COLUMNS in a projection before the
-        # aggregation -- as inline expressions inside the k min() aggregates
-        # each slot re-derived the md5+conv base (no cross-aggregate
-        # subexpression elimination: 2k md5 evaluations per shingle,
-        # measured 3.3 s -> 1.3 s for the signature aggregation at sf0.1).
-        base = portable_hash64(F.col("sh"), 0)
-        sh = sh.select(
-            "id",
-            F.shiftright(base, 30).alias("_hi"),
-            base.bitwiseAND(F.lit((1 << 30) - 1)).alias("_lo"),
-        )
-        ab = minhash_affine_constants(num_hashes)
-        hashes = [F.col("_hi") * a + F.col("_lo") * b for a, b in ab]
-    else:
-        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(num_hashes)]
-    return sh.groupBy("id").agg(
-        *[F.min(h).alias(f"mh{i}") for i, h in enumerate(hashes)]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -128,7 +69,6 @@ def minhash_lsh_pairs(
     jaccard_threshold: float | None = 0.7,
     max_bucket_size: int = 256,
     portable: bool = False,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs, optionally verified.
 
@@ -139,57 +79,40 @@ def minhash_lsh_pairs(
     signature and the band hash to the md5-based law so a DuckDB oracle
     can reproduce the pairs bit-for-bit.
 
-    ``materialize_signatures``: the signature table feeds THREE consumers
-    (the bucket-size count and both sides of the in-bucket self-join), and
-    Spark re-derives a DataFrame lineage per consumer -- the whole
-    shingle+hash pipeline would run ~3x (measured 23 s -> 5.3 s at sf0.1).
-    Signatures are num_hashes longs per doc (~1-2% of text bytes), so
-    materializing is the standard MinHash shape at any scale; in a
-    checkpointed production run the lakehouse stage write plays this role
-    instead (localCheckpoint is executor-local and not kill-resumable).
+    The signature table feeds three consumers (the bucket-size count and
+    both sides of the in-bucket self-join), and Spark re-derives a lineage
+    per consumer, so it is materialized once with an eager
+    ``localCheckpoint`` during this call (num_hashes longs per doc, ~1-2%
+    of the text bytes; measured 23 s -> 5.3 s at sf0.1). With a threshold,
+    the verified pairs sit behind a lazy ``localCheckpoint`` as well.
+    Consequences for the returned frame:
+
+    * its lineage is truncated at those checkpoints, whose blocks live on
+      the executors that computed them;
+    * a lost executor therefore fails later actions on the frame instead
+      of recomputing the lost rows (re-run the call to recover);
+    * the checkpointed blocks stay on the executors until the frame is
+      garbage-collected; no unpersist handle is returned;
+    * with a threshold, the first action materializes the whole
+      pre-filter candidate set (two ids and the Jaccard per candidate
+      pair), not only the pairs that pass the threshold.
+
+    A checkpointed production run persists stage outputs in the lakehouse
+    instead.
     """
-    sig = minhash_signature_agg(
-        df, text_col, id_col, num_hashes, shingle_size, portable=portable
+    sig = (
+        minhash_signature(
+            spread(df), id_col, F.lower(F.col(text_col)), num_hashes,
+            shingle_size, portable,
+        )
+        .withColumnRenamed(id_col, "id")
+        .localCheckpoint(eager=True)
     )
-    if materialize_signatures:
-        sig = sig.localCheckpoint(eager=True)
-
-    def band_hash(concat_col):
-        if portable:
-            return F.substring(F.md5(concat_col), 1, 16)
-        return F.xxhash64(concat_col).cast("string")
-
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"b{b}:"),
-                band_hash(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"mh{b * band_size + j}").cast("string")
-                            for j in range(band_size)
-                        ],
-                    )
-                ),
-            )
-            for b in range(num_hashes // band_size)
-        ]
-    )
-    buckets = sig.select("id", F.explode(bands).alias("bucket"))
-    sizes = salted_count(buckets, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    buckets = buckets.join(ok, "bucket", "inner")
-    pairs = (
-        buckets.withColumnRenamed("id", "id_a")
-        .join(buckets.withColumnRenamed("id", "id_b"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    keys = minhash_band_keys(sig, "id", num_hashes, band_size, portable)
+    pairs = generate_pairs(cap_blocks(keys, max_bucket_size), "id")
     if jaccard_threshold is None:
         return pairs
-    grams = _spread(df).select(
+    grams = spread(df).select(
         F.col(id_col).alias("id"),
         char_ngrams(F.lower(F.col(text_col)), shingle_size).alias("grams"),
     )
@@ -223,15 +146,15 @@ def minhash_lsh_pairs(
 def _simhash_fold_udf(bits: int):
     """Arrow fingerprint fold: collect_list(token hash) -> simhash long.
 
-    INTEGER-EXACT twin of the native 60/64-aggregate form (r8): per bit i,
-    s_i = sum over tokens of +/-1 = 2*popcount_i - n, fingerprint bit i set
-    iff s_i > 0 -- all int64 arithmetic, so the result is bit-identical to
-    the native aggregate law with zero fp-summation caveats. Exists because
-    the native form's 60 sum(CASE) aggregates + 60-term fingerprint fold
-    cost ~7 s of DRIVER-side Catalyst/Janino work per query at any data
-    size (measured r8, plan=7.1 s vs exec=1.1 s at sf0.1) -- the plan, not
-    the data, was the bottleneck (guide section 4.2: batch the custom
-    arithmetic in numpy, keep Spark for distribution).
+    Per bit i, s_i = sum over tokens of +/-1 = 2*popcount_i - n, and the
+    fingerprint bit i is set iff s_i > 0 -- all int64 arithmetic, so the
+    result is bit-identical to the DuckDB oracle's per-bit sum(CASE)
+    replay with no fp-summation caveats. The fold runs in numpy because
+    its native form (one sum(CASE) aggregate per bit plus a per-bit
+    fingerprint sum) cost ~7 s of Catalyst/Janino planning per query at
+    any data size (measured r8, plan=7.1 s vs exec=1.1 s at sf0.1): the
+    custom arithmetic is batched in numpy and Spark keeps the
+    distribution.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -248,7 +171,7 @@ def _simhash_fold_udf(bits: int):
             cnt = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
             mask = (2 * cnt) > len(h)  # s_i = 2*c_i - n > 0
             fp = (mask.astype(np.uint64) << shifts).sum(dtype=np.uint64)
-            out[i] = fp.astype(np.int64)  # bit 63 wraps to -(1<<63), as native
+            out[i] = fp.astype(np.int64)  # bit 63 wraps to -(1<<63) (JVM long)
         return pd.Series(out)
 
     return fold
@@ -260,50 +183,29 @@ def simhash(
     id_col: str,
     bits: int = 64,
     portable: bool = False,
-    arrow: bool = True,
 ) -> DataFrame:
-    """SimHash over the document's token set.
+    """SimHash over the document's tokens: (id, simhash).
 
     Each token contributes its hash bit pattern; the fingerprint bit i is
     1 when more tokens have bit i set than unset. ``portable=True`` uses
     the md5 60-bit hash law (callers should pass bits=60 with it) so a
     DuckDB oracle can reproduce fingerprints exactly.
 
-    ``arrow=True`` (default): tokens are hashed in the JVM, then the
-    per-document bit-count fold runs as one Arrow pandas UDF over
-    collect_list(h) -- integer-exact, bit-identical to the native form
-    (see _simhash_fold_udf). The aggregation state is the document's own
-    token hashes (bounded by the document's size, which already travels
-    the pipeline), not a hot-key blowup. ``arrow=False`` keeps the
-    UDF-free explode->aggregate form: per bit, sum(+/-1) via
-    shiftright/and -- same results, ~7 s/query slower to PLAN.
+    Tokens are hashed in the JVM (xxhash64, or the portable law) and
+    gathered per document with collect_list; the per-bit fold is an Arrow
+    pandas UDF (:func:`_simhash_fold_udf`), integer-exact. The aggregation
+    state is the document's own token hashes, bounded by the document's
+    size, which already travels the pipeline.
     """
     tok_hash = (
         portable_hash64(F.col("tok"), 0) if portable else F.xxhash64("tok")
     )
-    toks = _spread(df).select(
+    toks = spread(df).select(
         F.col(id_col).alias("id"),
         F.explode(tokenize(F.col(text_col))).alias("tok"),
     ).withColumn("h", tok_hash)
-    if arrow:
-        hs = toks.groupBy("id").agg(F.collect_list("h").alias("_hs"))
-        return hs.select("id", _simhash_fold_udf(bits)(F.col("_hs")).alias("simhash"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(bits)
-    ]
-    sums = toks.groupBy("id").agg(*aggs)
-    fp = sum(
-        (
-            F.when(F.col(f"s{i}") > 0, F.lit(1).cast("long") * (1 << i) if i < 63
-                   else F.lit(-(1 << 63))).otherwise(F.lit(0).cast("long"))
-            for i in range(bits)
-        ),
-        F.lit(0).cast("long"),
-    )
-    return sums.select("id", fp.alias("simhash"))
+    hs = toks.groupBy("id").agg(F.collect_list("h").alias("_hs"))
+    return hs.select("id", _simhash_fold_udf(bits)(F.col("_hs")).alias("simhash"))
 
 
 def simhash_pairs(
@@ -313,17 +215,17 @@ def simhash_pairs(
     max_hamming: int = 3,
     max_bucket_size: int = 256,
     portable: bool = False,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: 4-segment pigeonhole blocking + exact
     Hamming verification (<= max_hamming, which must be <= 3 for 4
-    segments to guarantee recall). Fingerprints are materialized by
-    default for the same three-consumer reason as minhash_lsh_pairs."""
+    segments to guarantee recall). Fingerprints are materialized with an
+    eager ``localCheckpoint`` for the same three-consumer reason as
+    minhash_lsh_pairs, with the same consequences for the returned frame."""
     bits = 60 if portable else 64
     seg_bits = bits // 4
-    fp = simhash(df, text_col, id_col, bits=bits, portable=portable)
-    if materialize_signatures:
-        fp = fp.localCheckpoint(eager=True)
+    fp = simhash(df, text_col, id_col, bits=bits, portable=portable).localCheckpoint(
+        eager=True
+    )
     segs = F.array(
         *[
             F.concat(
@@ -336,25 +238,14 @@ def simhash_pairs(
         ]
     )
     buckets = fp.select("id", "simhash", F.explode(segs).alias("bucket"))
-    sizes = salted_count(buckets.select("id", "bucket"), "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    buckets = buckets.join(ok, "bucket", "inner")
-    a = buckets.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "bucket"
-    )
-    b = buckets.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "bucket"
-    )
-    pairs = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+    capped = cap_blocks(buckets, max_bucket_size, key="bucket")
+    pairs = generate_pairs(capped, "id", key="bucket", carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
+        pairs.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -365,8 +256,23 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
 ) -> DataFrame:
-    """Char-n-gram Jaccard near-dup pairs within explicit blocks."""
-    d = _spread(df).select(
+    """Char-n-gram Jaccard near-dup pairs within explicit blocks.
+
+    The scored pairs sit behind a lazy ``localCheckpoint``, a
+    single-evaluation barrier that keeps the threshold filter from
+    re-running the set algebra. For the returned frame this means:
+
+    * its lineage is truncated at that checkpoint, whose blocks live on
+      the executors that computed them;
+    * a lost executor therefore fails later actions on the frame instead
+      of recomputing the lost rows (re-run the call to recover);
+    * the checkpointed blocks stay on the executors until the frame is
+      garbage-collected; no unpersist handle is returned;
+    * the first action materializes the whole pre-filter candidate set
+      (two ids and the Jaccard for every same-block pair), not only the
+      pairs that pass the threshold.
+    """
+    d = spread(df).select(
         F.col(id_col).alias("id"),
         *block_cols,
         char_ngrams(F.lower(F.col(text_col)), n).alias("grams"),
@@ -395,7 +301,6 @@ def embedding_near_dup_pairs(
     seed: int = 42,
     max_bucket_size: int = 1024,
     arrow: bool | str = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup via banded random-hyperplane LSH.
 
@@ -409,7 +314,6 @@ def embedding_near_dup_pairs(
     + one explode; ids only travel through the bucket join, vectors are
     re-joined after the pair dedup.
     """
-    from crocodile_spark.operators.blocking import key_count
     from crocodile_spark.operators.similarity_search import (
         embedding_dim,
         hyperplane_table_buckets,
@@ -427,24 +331,15 @@ def embedding_near_dup_pairs(
         )(F.col(emb_col))
     else:
         buckets = hyperplane_table_buckets(emb_col, dim, num_planes, num_tables, seed)
-    b = _spread(df).select(
-        F.col(id_col).alias("id"), F.explode(buckets).alias("bucket")
-    )
     # (id, bucket) feeds the size count + both self-join sides: materialize
     # so the hyperplane projection (the Arrow UDF) runs once, not 3x
-    # (materialize=False keeps the plan lazy for inspection)
-    if materialize:
-        b = b.localCheckpoint(eager=True)
-    sizes = key_count(b, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    b = b.join(ok, "bucket", "inner")
-    pairs = (
-        b.withColumnRenamed("id", "id_a")
-        .join(b.withColumnRenamed("id", "id_b"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    b = (
+        spread(df)
+        .select(F.col(id_col).alias("id"), F.explode(buckets).alias("bucket"))
+        .localCheckpoint(eager=True)
     )
+    capped = cap_blocks(b, max_bucket_size, key="bucket")
+    pairs = generate_pairs(capped, "id", key="bucket")
     v = df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
     if arrow:
         # bit-exact Arrow fold twin of the HOF cosine (emb_kernels): same

@@ -405,7 +405,7 @@ def delta_pairs(
         # cheap.
         delta_keys = broadcast_if_small(delta_keys, "key", delta_keys.count(), cfg)
         keys = keys.join(delta_keys, "key", "semi")
-    capped = cap_blocks(keys, cfg)
+    capped = cap_blocks(keys, cfg.max_block_size)
     new_keys = capped.join(seed, "url", "semi")
     cand = (
         new_keys.select(F.col("url").alias("u1"), "key")

@@ -218,7 +218,6 @@ def lsh_topk(
     seed: int = 42,
     max_bucket_size: int = 4096,
     arrow: bool | str = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """ANN top-k: single-pass random-hyperplane LSH bucket join, exact
     cosine within candidates, OR over ``num_tables`` independent tables.
@@ -234,7 +233,7 @@ def lsh_topk(
     (oracle-parity Arrow path, r8); False uses the native-expression twin
     end to end (UDF-free deployments).
     """
-    from crocodile_spark.operators.blocking import key_count
+    from crocodile_spark.operators.blocking import cap_blocks, spread
 
     dim = embedding_dim(corpus, emb)
     if dim is None:
@@ -246,18 +245,15 @@ def lsh_topk(
     else:
         buckets = hyperplane_table_buckets(emb, dim, num_planes, num_tables, seed)
 
-    from crocodile_spark.operators.blocking import spread
-
     qb = spread(queries).select(F.col(query_id), F.explode(buckets).alias("bucket"))
-    cb = spread(corpus).select(F.col(corpus_id), F.explode(buckets).alias("bucket"))
     # (id, bucket) feeds the size count AND the bucket join: materialize so
     # the corpus-side hyperplane projection runs once, not per consumer.
-    # materialize=False keeps the plan lazy (plan inspection, explain).
-    if materialize:
-        cb = cb.localCheckpoint(eager=True)
-    sizes = key_count(cb, "bucket")
-    ok = sizes.where(F.col("count") <= max_bucket_size).select("bucket")
-    cb = cb.join(ok, "bucket", "inner")
+    cb = (
+        spread(corpus)
+        .select(F.col(corpus_id), F.explode(buckets).alias("bucket"))
+        .localCheckpoint(eager=True)
+    )
+    cb = cap_blocks(cb, max_bucket_size, key="bucket")
     pairs = (
         qb.join(cb, "bucket")
         .select(query_id, corpus_id)

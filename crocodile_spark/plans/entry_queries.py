@@ -634,11 +634,10 @@ def q_doc_fingerprint(spark, sf_dir):
     """Document fingerprinting: two portable MinHash slots (lexicographic
     min of md5(seed || shingle) over the doc's char-3-gram set) plus the
     Rabin-Karp polynomial rolling hash of the full text."""
+    from crocodile_spark.operators.blocking import spread
     from crocodile_spark.operators.text_analysis import rolling_hash
 
-    from crocodile_spark.operators.dedup import _spread
-
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     grams = char_ngrams(F.lower(F.col("text")))
     fp = lambda seed: F.array_min(  # noqa: E731
         F.transform(grams, lambda g: F.md5(F.concat(F.lit(seed), g)))
@@ -1399,8 +1398,8 @@ def q_minhash_lsh_dedup(spark, sf_dir):
 
 def _mh_sig_aggs() -> str:
     """Portable minhash slots: one md5 base per shingle, affine derivations
-    (must mirror operators.dedup.minhash_signature_agg portable path)."""
-    from crocodile_spark.operators.dedup import minhash_affine_constants
+    (must mirror operators.blocking.minhash_signature's portable law)."""
+    from crocodile_spark.operators.blocking import minhash_affine_constants
 
     lo_mask = (1 << 30) - 1
     return ", ".join(

@@ -149,8 +149,8 @@ def main() -> None:
     full_keys = token_keys(full.signatures).unionByName(
         static_keys(full.signatures, cfg)
     ).persist()
-    # MinHash band keys are formatted "mh<band>:<hash>" (blocking.band_keys
-    # uses F.lit(f"mh{b}:")) -- match the numbered prefix (ADVICE r7: a
+    # MinHash band keys are formatted "mh<band>:<hash>"
+    # (blocking.minhash_band_keys) -- match the numbered prefix (ADVICE r7: a
     # bare "mh:" prefix never matched, binning every band key as "other")
     fam = F.when(F.col("key").startswith("tok:"), "tok").otherwise(
         F.when(F.col("key").startswith("host:"), "host").otherwise(

@@ -1,4 +1,4 @@
-"""Blocking stage tests: salted DF counts, block cap, key families, pair
+"""Blocking stage tests: block cap, key families, stored key format, pair
 generation determinism."""
 
 from __future__ import annotations
@@ -11,52 +11,76 @@ from crocodile_spark.operators.blocking import (
     cap_blocks,
     generate_pairs,
     minhash_signature,
-    salted_count,
+    static_keys,
 )
 from crocodile_spark.operators.normalize_stage import normalize_pages
 
 
-def test_salted_count_matches_plain_count(spark):
-    df = spark.createDataFrame(
-        [("k1",)] * 100 + [("k2",)] * 3 + [("k3",)] * 1, ["key"]
-    )
-    got = {r["key"]: r["count"] for r in salted_count(df, "key").collect()}
-    assert got == {"k1": 100, "k2": 3, "k3": 1}
-
-
 def test_cap_blocks_drops_oversized(spark):
-    cfg = PipelineConfig(max_block_size=4)
     rows = [("hot", f"u{i}") for i in range(10)] + [("cold", "a"), ("cold", "b")]
     keys = spark.createDataFrame(rows, ["key", "url"])
-    got = cap_blocks(keys, cfg).select("key").distinct().collect()
+    got = cap_blocks(keys, 4).select("key").distinct().collect()
     assert {r["key"] for r in got} == {"cold"}
+    # any key column name; a block of exactly the cap survives
+    buckets = keys.withColumnRenamed("key", "bucket")
+    got = cap_blocks(buckets, 10, key="bucket").select("bucket").distinct()
+    assert {r["bucket"] for r in got.collect()} == {"hot", "cold"}
 
 
 def test_generate_pairs_orientation_and_dedup(spark):
-    cfg = PipelineConfig(shuffle_partitions=4)
     keys = spark.createDataFrame(
         [("k", "b"), ("k", "a"), ("k", "c"), ("j", "a"), ("j", "b")],
         ["key", "url"],
     )
-    pairs = generate_pairs(keys, cfg).collect()
+    pairs = generate_pairs(keys).collect()
     got = {(r["url_a"], r["url_b"]) for r in pairs}
     # a<b ordering, (a,b) appears once despite two shared keys
     assert got == {("a", "b"), ("a", "c"), ("b", "c")}
+    # carried columns travel with their id on both sides, under any id and
+    # key column names, and the pair is still emitted once
+    buckets = spark.createDataFrame(
+        [("k", 2, 20), ("k", 1, 10), ("j", 1, 10), ("j", 2, 20), ("j", 3, 30)],
+        ["bucket", "id", "fp"],
+    )
+    got = generate_pairs(buckets, "id", key="bucket", carry=("fp",))
+    assert got.columns == ["id_a", "id_b", "fp_a", "fp_b"]
+    assert sorted(map(tuple, got.collect())) == [
+        (1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30)
+    ]
 
 
 def test_minhash_identical_strings_share_signature(spark):
     df = spark.createDataFrame(
-        [("same text here", "same text here", "other wording entirely")],
-        ["a", "b", "c"],
+        [(0, "same text here"), (1, "same text here"), (2, "other wording entirely")],
+        ["id", "text"],
     )
-    row = df.select(
-        minhash_signature(F.col("a"), 8).alias("sa"),
-        minhash_signature(F.col("b"), 8).alias("sb"),
-        minhash_signature(F.col("c"), 8).alias("sc"),
-    ).collect()[0]
-    assert row["sa"] == row["sb"]
-    assert row["sa"] != row["sc"]
-    assert len(row["sa"]) == 8
+    for portable in (False, True):
+        sig = minhash_signature(df, "id", F.col("text"), 8, portable=portable)
+        assert sig.columns == ["id"] + [f"mh{i}" for i in range(8)]
+        rows = {r["id"]: tuple(r)[1:] for r in sig.collect()}
+        assert rows[0] == rows[1]
+        assert rows[0] != rows[2]
+
+
+def test_static_keys_strings_are_pinned(spark):
+    """static_keys rows are stored resolution state (streaming snapshots,
+    incremental_er's existing_static_keys): a change to the host or MinHash
+    band-key format would silently stop stored keys from matching fresh
+    ones, while the batch and incremental paths still agreed with each
+    other. The exact strings for one fixed record are therefore golden."""
+    sigs = spark.createDataFrame(
+        [("https://example.org/wiki/Ada_Lovelace", "example.org",
+          "ada lovelace english mathematician")],
+        "url string, host string, text_norm string",
+    )
+    got = sorted(r["key"] for r in static_keys(sigs, PipelineConfig()).collect())
+    assert got == [
+        "host:example.org",
+        "mh0:-6715260754182340876",
+        "mh1:4882372235208560776",
+        "mh2:71982898039932864",
+        "mh3:643042797260442611",
+    ]
 
 
 def test_block_stage_recall_on_corpus(spark, corpus_dfs):

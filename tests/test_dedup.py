@@ -75,6 +75,42 @@ def test_simhash_hamming_tracks_similarity(spark):
     assert ham(fp[0], fp[1]) <= 10
 
 
+def test_simhash_matches_python_fold_of_token_hashes(spark, docs):
+    """The Arrow fold equals a pure-Python fold of the same token hashes
+    (bit i set iff more than half the tokens set it), under both hash
+    laws. Single-token documents make the fingerprint the token hash
+    itself, so bit 63 (the sign of the JVM long) is exercised."""
+    from crocodile_spark.functions.normalize import tokenize
+    from crocodile_spark.operators.blocking import portable_hash64
+
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf"]
+    short = spark.createDataFrame(
+        [(100 + i, w) for i, w in enumerate(words)], ["doc_id", "text"]
+    )
+    df = docs.unionByName(short)
+    toks = df.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
+
+    def fold(hs, bits):
+        fp = 0
+        for i in range(bits):
+            if 2 * sum((h >> i) & 1 for h in hs) > len(hs):
+                fp |= 1 << i
+        return fp - (1 << 64) if fp >> 63 else fp
+
+    got = {}
+    for bits, portable, law in (
+        (64, False, F.xxhash64("tok")),
+        (60, True, portable_hash64(F.col("tok"), 0)),
+    ):
+        hashes = {}
+        for r in toks.select("doc_id", law.alias("h")).collect():
+            hashes.setdefault(r["doc_id"], []).append(r["h"] & ((1 << 64) - 1))
+        fps = simhash(df, "text", "doc_id", bits=bits, portable=portable)
+        got[bits] = {r["id"]: r["simhash"] for r in fps.collect()}
+        assert got[bits] == {i: fold(hs, bits) for i, hs in hashes.items()}
+    assert any(v < 0 for v in got[64].values()), "no fingerprint sets bit 63"
+
+
 def test_ngram_jaccard_pairs(spark, docs):
     d = docs.withColumn("block", F.lit("b"))
     got = {

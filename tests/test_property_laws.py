@@ -153,7 +153,7 @@ def test_portable_hash_law_matches_duckdb(spark):
     import duckdb
     from pyspark.sql import functions as F
 
-    from crocodile_spark.operators.dedup import (
+    from crocodile_spark.operators.blocking import (
         minhash_affine_constants,
         portable_hash64,
     )

@@ -59,9 +59,9 @@ def test_hot_key_dropped_but_pairs_survive_via_other_keys(spark):
     rows = [("hot", f"u{i:03d}") for i in range(50)]
     rows += [("rare", "u001"), ("rare", "u002")]
     keys = spark.createDataFrame(rows, ["key", "url"])
-    capped = cap_blocks(keys, cfg)
+    capped = cap_blocks(keys, cfg.max_block_size)
     assert {r["key"] for r in capped.select("key").distinct().collect()} == {"rare"}
-    pairs = {(r["url_a"], r["url_b"]) for r in generate_pairs(capped, cfg).collect()}
+    pairs = {(r["url_a"], r["url_b"]) for r in generate_pairs(capped).collect()}
     assert pairs == {("u001", "u002")}
 
 
